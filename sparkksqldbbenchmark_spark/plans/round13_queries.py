@@ -4335,66 +4335,17 @@ def bloom_prefilter_fpr_certified(
     Reference basis: sketch-certificate family (countmin r10, KMV
     r5/staged, HLL-union r10, bitmap r12 — Bloom was the missing
     member; runtime-filter twin graded r6)."""
-    from sparkksqldbbenchmark_spark.llm.hashing import spark_md5_int
+    from sparkksqldbbenchmark_spark.llm.curation import bloom_flags
 
-    m, k = 4096, 3
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     members = customer.where(
         F.col("c_mktsegment") == "BUILDING"
     ).select("c_custkey")
-    j = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j")
-    hp = (
-        "(" + spark_md5_int(
-            "concat(cast(j as string), '#', cast(c_custkey as string))"
-        ) + f") % {m}"
-    )
-    mpos = members.select("c_custkey", j).select(
-        F.expr(hp).alias("p")
-    )
-    bloom = mpos.groupBy(F.expr("p DIV 32").alias("word")).agg(
-        F.expr("bit_or(shiftleft(1L, cast(p % 32 as int)))")
-        .cast("long")
-        .alias("bits")
-    )
-    hpo = (
-        "(" + spark_md5_int(
-            "concat(cast(j as string), '#', cast(o_custkey as string))"
-        ) + f") % {m}"
-    )
-    opos = orders.select(
-        "o_orderkey", "o_orderpriority", "o_custkey", j
-    ).select(
-        "o_orderkey",
-        "o_orderpriority",
+    per_order = bloom_flags(
+        members,
+        orders.select("o_orderkey", "o_orderpriority", "o_custkey"),
         "o_custkey",
-        F.expr(hpo).alias("p"),
-    )
-    hits = opos.join(
-        F.broadcast(bloom),
-        F.expr("word = p DIV 32"),
-        "left",
-    ).select(
-        "o_orderkey",
-        "o_orderpriority",
-        "o_custkey",
-        F.when(
-            F.col("bits").isNotNull()
-            & (
-                F.expr(
-                    "bits & shiftleft(1L, cast(p % 32 as int))"
-                )
-                != 0
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("hit"),
-    )
-    per_order = hits.groupBy(
-        "o_orderkey", "o_orderpriority", "o_custkey"
-    ).agg(
-        F.when(F.sum("hit") == k, 1).otherwise(0).alias("cand")
     )
     flagged = per_order.join(
         members.withColumnRenamed("c_custkey", "o_custkey")
@@ -4403,7 +4354,7 @@ def bloom_prefilter_fpr_certified(
         "left",
     ).select(
         "o_orderpriority",
-        "cand",
+        F.col("bloom_hit").alias("cand"),
         F.coalesce("is_member", F.lit(0)).alias("is_member"),
     )
     return flagged.groupBy("o_orderpriority").agg(

@@ -2497,23 +2497,13 @@ def gopher_repetition_rules(
     text_repetition_ratio r2, quality_threshold_sweep_confusion r13
     — this adds the multi-rule composite KEEP verdict those rows
     feed)."""
+    from sparkksqldbbenchmark_spark.llm.curation import sentence_quality
     from sparkksqldbbenchmark_spark.llm.hashing import spark_tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.expr(spark_tokens("text")).alias("toks")
-    ).where(F.size("toks") > 0)
-    # sentence boundaries scan-side: a word whose md5 & 3 == 0 closes
-    # its sentence (the planted-boundary convention shared with the
-    # graduated chunker). r18 optimization: O(n) boundary/slice counts
-    # (llm/sentences.py) replace the O(ns²) fold — identical integers.
-    from sparkksqldbbenchmark_spark.llm.sentences import (
-        with_sentence_counts,
-    )
-
-    per_doc = with_sentence_counts(toks).select(
+    per_doc = sentence_quality(docs, "doc_id").select(
         "doc_id",
-        F.size("toks").cast("long").alias("n_words"),
+        F.col("n_words").cast("long").alias("n_words"),
         F.col("ns").cast("long").alias("n_sentences"),
         F.col("nd").cast("long").alias("nd"),
         F.size(
@@ -2523,6 +2513,9 @@ def gopher_repetition_rules(
     # bigram mode: the ONLY exchange — (doc_id, bigram)-grain counts.
     # sequence(1, n-1) is guarded: a 1-word doc must yield NO bigrams
     # (sequence(1, 0) is the DESCENDING [1, 0] — the short-doc trap).
+    toks = docs.select(
+        "doc_id", F.expr(spark_tokens("text")).alias("toks")
+    ).where(F.size("toks") > 0)
     bg = toks.select(
         "doc_id",
         F.explode(
@@ -2771,6 +2764,7 @@ def waterfill_budget_allocation(
     Reference basis: selection/apportion family
     (token_budget_selection r4 flagship, mixture_quota_largest_
     remainder r11, curriculum_token_budget_phases r13)."""
+    from sparkksqldbbenchmark_spark.llm.curation import waterfill
     from sparkksqldbbenchmark_spark.llm.hashing import spark_tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2779,79 +2773,7 @@ def waterfill_budget_allocation(
         .cast("long")
         .alias("total_tokens")
     )
-    # bounded frame from here on (#sources rows)
-    w_rank = Window.orderBy("total_tokens", "source")
-    ranked = totals.select(
-        "source",
-        "total_tokens",
-        F.row_number().over(w_rank).alias("rk"),
-        F.sum("total_tokens")
-        .over(w_rank.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("pfx"),
-    )
-    glob = ranked.agg(
-        (F.sum("total_tokens") / 2).cast("long").alias("budget"),
-        F.count(F.lit(1)).alias("n"),
-        F.max("total_tokens").alias("tmax"),
-    )
-    r = ranked.crossJoin(F.broadcast(glob))
-    feas = r.where(
-        F.col("pfx") + F.col("total_tokens") * (F.col("n") - F.col("rk"))
-        <= F.col("budget")
-    ).agg(
-        F.coalesce(F.max("rk"), F.lit(0)).alias("i"),
-        F.coalesce(F.max("pfx"), F.lit(0)).alias("pi"),
-    )
-    level = (
-        glob.crossJoin(F.broadcast(feas))
-        .select(
-            F.when(
-                F.col("n") > F.col("i"),
-                F.floor(
-                    (F.col("budget") - F.col("pi"))
-                    / (F.col("n") - F.col("i"))
-                ),
-            )
-            .otherwise(F.col("tmax"))
-            .cast("long")
-            .alias("lvl"),
-            F.when(
-                F.col("n") > F.col("i"),
-                (F.col("budget") - F.col("pi"))
-                % (F.col("n") - F.col("i")),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("rem"),
-            F.col("i"),
-        )
-    )
-    out = ranked.crossJoin(F.broadcast(level))
-    # rank the UNSATURATED subset by source name (bounded frame) so
-    # the remainder's +1 lands on the lexicographically first ones
-    unsat_rk = (
-        out.where(F.col("rk") > F.col("i"))
-        .select(
-            "source",
-            F.row_number().over(Window.orderBy("source")).alias("u2"),
-        )
-    )
-    return (
-        out.join(unsat_rk, "source", "left")
-        .select(
-            "source",
-            "total_tokens",
-            F.when(F.col("rk") <= F.col("i"), F.col("total_tokens"))
-            .otherwise(
-                F.col("lvl")
-                + F.when(F.col("u2") <= F.col("rem"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("allocated_tokens"),
-            (F.col("rk") <= F.col("i")).alias("saturated"),
-            F.col("lvl").alias("level"),
-        )
-    )
+    return waterfill(totals)
 
 
 # ----------------------- 2-hop neighborhood aggregation (dup graph) --
@@ -3186,12 +3108,12 @@ def decontam_bloom_prefilter_certified(
     Reference basis: decontamination family (decontam_ngram_overlap
     r4, split_leakage_near_dup_audit r13, decontam_max_span r11
     TAIL; sketch side: bloom_prefilter_fpr_certified r13)."""
+    from sparkksqldbbenchmark_spark.llm.curation import bloom_flags
     from sparkksqldbbenchmark_spark.llm.hashing import (
         spark_md5_int,
         spark_word_shingles,
     )
 
-    m, k = 4096, 3
     docs = load_table(spark, sf_dir, "documents")
     split = F.expr(
         f"{spark_md5_int('cast(doc_id as string)')} % 2"
@@ -3202,48 +3124,10 @@ def decontam_bloom_prefilter_certified(
         .select(F.explode(sh).alias("sh"))
         .distinct()
     )
-    j = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j")
-    hp = (
-        "("
-        + spark_md5_int("concat(cast(j as string), '#', sh)")
-        + f") % {m}"
-    )
-    bloom = (
-        train_sh.select("sh", j)
-        .select(F.expr(hp).alias("p"))
-        .groupBy(F.expr("p DIV 32").alias("word"))
-        .agg(
-            F.expr("bit_or(shiftleft(1L, cast(p % 32 as int)))")
-            .cast("long")
-            .alias("bits")
-        )
-    )
     test_sh = docs.where(split == 1).select(
         "source", "doc_id", F.explode(sh).alias("sh")
     )
-    probes = test_sh.select("source", "doc_id", "sh", j).select(
-        "source", "doc_id", "sh", F.expr(hp).alias("p")
-    )
-    bits = probes.join(
-        F.broadcast(bloom), F.expr("word = p DIV 32"), "left"
-    ).select(
-        "source",
-        "doc_id",
-        "sh",
-        F.when(
-            F.col("bits").isNotNull()
-            & (
-                F.expr("bits & shiftleft(1L, cast(p % 32 as int))")
-                != 0
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("hit"),
-    )
-    per_shingle = bits.groupBy("source", "doc_id", "sh").agg(
-        F.when(F.sum("hit") == k, 1).otherwise(0).alias("bloom_hit")
-    )
+    per_shingle = bloom_flags(train_sh, test_sh, "sh")
     judged = per_shingle.join(
         train_sh.select(F.col("sh"), F.lit(1).alias("ex")),
         "sh",
@@ -4144,112 +4028,25 @@ def curation_pipeline_v2_composed(
     dedup_keep_best r5, token_budget_selection r4;
     gopher_repetition_rules / waterfill_budget_allocation staged
     this round)."""
-    from sparkksqldbbenchmark_spark.llm.hashing import spark_tokens
+    from sparkksqldbbenchmark_spark.llm.curation import (
+        canonical_dedup,
+        gopher_keep,
+        sentence_quality,
+        waterfill,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        "source",
-        "text",
-        F.expr(spark_tokens("text")).alias("toks"),
-    ).where(F.size("toks") > 0)
-    # r18 optimization: O(n) boundary/slice sentence counts
-    # (llm/sentences.py) replace the O(ns²) fold — identical integers.
-    from sparkksqldbbenchmark_spark.llm.sentences import (
-        with_sentence_counts,
-    )
-
-    quality = with_sentence_counts(toks).select(
-        "doc_id",
-        "source",
-        "text",
-        F.size("toks").alias("n_words"),
-        "ns",
-        "nd",
-    )
-    keepers = quality.where(
-        (F.col("ns") - F.col("nd")) * 1000000 / F.col("ns") < 300000
-    )
-    canon = keepers.withColumn(
-        "canonical_id",
-        F.min("doc_id").over(Window.partitionBy(F.md5("text"))),
-    )
+    keepers = gopher_keep(sentence_quality(docs, "doc_id", "source", "text"))
     survivors = (
-        canon.where(F.col("doc_id") == F.col("canonical_id"))
+        canonical_dedup(keepers)
         .groupBy("source")
         .agg(
             F.sum("n_words").cast("long").alias("total_tokens"),
             F.count(F.lit(1)).cast("long").alias("docs_kept"),
         )
     )
-    # water-filling over the bounded survivor frame (the staged
-    # allocator's algebra, inlined over this pipeline's totals)
-    w_rank = Window.orderBy("total_tokens", "source")
-    ranked = survivors.select(
-        "source",
-        "docs_kept",
-        "total_tokens",
-        F.row_number().over(w_rank).alias("rk"),
-        F.sum("total_tokens")
-        .over(w_rank.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("pfx"),
-    )
-    glob = ranked.agg(
-        (F.sum("total_tokens") / 2).cast("long").alias("budget"),
-        F.count(F.lit(1)).alias("n"),
-        F.max("total_tokens").alias("tmax"),
-    )
-    r = ranked.crossJoin(F.broadcast(glob))
-    feas = r.where(
-        F.col("pfx")
-        + F.col("total_tokens") * (F.col("n") - F.col("rk"))
-        <= F.col("budget")
-    ).agg(
-        F.coalesce(F.max("rk"), F.lit(0)).alias("i"),
-        F.coalesce(F.max("pfx"), F.lit(0)).alias("pi"),
-    )
-    level = glob.crossJoin(F.broadcast(feas)).select(
-        F.when(
-            F.col("n") > F.col("i"),
-            F.floor(
-                (F.col("budget") - F.col("pi"))
-                / (F.col("n") - F.col("i"))
-            ),
-        )
-        .otherwise(F.col("tmax"))
-        .cast("long")
-        .alias("lvl"),
-        F.when(
-            F.col("n") > F.col("i"),
-            (F.col("budget") - F.col("pi"))
-            % (F.col("n") - F.col("i")),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rem"),
-        F.col("i"),
-    )
-    out = ranked.crossJoin(F.broadcast(level))
-    unsat_rk = out.where(F.col("rk") > F.col("i")).select(
-        "source",
-        F.row_number().over(Window.orderBy("source")).alias("u2"),
-    )
-    return (
-        out.join(unsat_rk, "source", "left")
-        .select(
-            "source",
-            "docs_kept",
-            "total_tokens",
-            F.when(
-                F.col("rk") <= F.col("i"), F.col("total_tokens")
-            )
-            .otherwise(
-                F.col("lvl")
-                + F.when(F.col("u2") <= F.col("rem"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("allocated_tokens"),
-        )
+    return waterfill(survivors).select(
+        "source", "docs_kept", "total_tokens", "allocated_tokens"
     )
 
 

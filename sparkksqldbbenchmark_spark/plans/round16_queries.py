@@ -350,210 +350,24 @@ def curation_pipeline_v3_composed(
     Reference basis: curation family capstone
     (curation_pipeline_v2_composed r14; decontam_bloom r14;
     gopher/waterfill r14)."""
-    from sparkksqldbbenchmark_spark.llm.hashing import (
-        spark_md5_int,
-        spark_tokens,
-        spark_word_shingles,
+    from sparkksqldbbenchmark_spark.llm.curation import (
+        decontaminate,
+        eval_split,
+        gopher_keep,
+        sentence_quality,
+        waterfill,
     )
 
-    m, kbits = 4096, 3
     docs = load_table(spark, sf_dir, "documents")
-    evalsplit = F.expr(
-        f"{spark_md5_int('cast(doc_id as string)')} % 10"
-    )
-    pool = docs.where(evalsplit != 0)
-    eval_docs = docs.where(evalsplit == 0)
-    shexpr = F.expr(spark_word_shingles("text", 3))
-    eval_sh = eval_docs.select(F.explode(shexpr).alias("esh")).distinct()
-    # two consumers (Bloom build + exact-verify join) — materialize so
-    # the eval-split shingle explode+distinct runs once
-    eval_sh = eval_sh.localCheckpoint(eager=True)
-
-    # -- stage 1: Gopher dup-sentence keep (scan-side, O(n)) --
-    # r18 optimization: O(n) boundary/slice sentence counts
-    # (llm/sentences.py) replace the O(ns²) fold — identical integers.
-    from sparkksqldbbenchmark_spark.llm.sentences import (
-        with_sentence_counts,
-    )
-
-    toks = pool.select(
-        "doc_id",
-        "source",
-        "text",
-        F.expr(spark_tokens("text")).alias("toks"),
-    ).where(F.size("toks") > 0)
-    quality = with_sentence_counts(toks).select(
-        "doc_id",
-        "source",
-        "text",
-        F.size("toks").alias("n_words"),
-        "ns",
-        "nd",
-    )
-    keepers = quality.where(
-        (F.col("ns") - F.col("nd")) * 1000000 / F.col("ns") < 300000
-    )
-
-    # -- stage 2: canonical exact dedup --
-    canon = keepers.withColumn(
-        "canonical_id",
-        F.min("doc_id").over(Window.partitionBy(F.md5("text"))),
-    )
-    deduped = canon.where(F.col("doc_id") == F.col("canonical_id"))
-    # three consumers below (shingle probes, the anti-join, the
-    # semi-join) — materialize so the interpreted sentence fold, the
-    # Gopher cut and the md5 window run once, not three times
-    deduped = deduped.localCheckpoint(eager=True)
-
-    # -- stage 3: Bloom-prefiltered decontamination --
-    j = F.explode(F.sequence(F.lit(0), F.lit(kbits - 1))).alias("j")
-    hp = (
-        "("
-        + spark_md5_int("concat(cast(j as string), '#', sh)")
-        + f") % {m}"
-    )
-    bloom = (
-        eval_sh.select(F.col("esh").alias("sh"), j)
-        .select(F.expr(hp).alias("p"))
-        .groupBy(F.expr("p DIV 32").alias("word"))
-        .agg(
-            F.expr("bit_or(shiftleft(1L, cast(p % 32 as int)))")
-            .cast("long")
-            .alias("bits")
-        )
-    )
-    train_sh = deduped.select(
-        "doc_id", F.explode(shexpr).alias("sh")
-    )
-    probes = train_sh.select("doc_id", "sh", j).select(
-        "doc_id", "sh", F.expr(hp).alias("p")
-    )
-    flagged_sh = (
-        probes.join(
-            F.broadcast(bloom), F.expr("word = p DIV 32"), "left"
-        )
-        .select(
-            "doc_id",
-            "sh",
-            F.when(
-                F.col("bits").isNotNull()
-                & (
-                    F.expr("bits & shiftleft(1L, cast(p % 32 as int))")
-                    != 0
-                ),
-                1,
-            )
-            .otherwise(0)
-            .alias("hit"),
-        )
-        .groupBy("doc_id", "sh")
-        .agg(F.sum("hit").alias("hits"))
-        .where(F.col("hits") == kbits)
-    )
-    # exact containment join ONLY over the Bloom-flagged sliver —
-    # identical verdicts to the full exact join because FN = 0
-    contaminated = (
-        flagged_sh.join(
-            eval_sh.select(F.col("esh").alias("sh")), "sh"
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    # two consumers (anti + semi) — materialize the tiny id set so the
-    # shingle-probe subtree runs once
-    contaminated = contaminated.localCheckpoint(eager=True)
-    clean = deduped.join(contaminated, "doc_id", "left_anti")
-    dropped = (
-        deduped.join(contaminated, "doc_id", "left_semi")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).cast("long").alias("docs_decont"))
-    )
-
-    # -- stage 4: water-filled budget over the survivor frame --
-    survivors = (
-        clean.groupBy("source")
-        .agg(
-            F.sum("n_words").cast("long").alias("total_tokens"),
-            F.count(F.lit(1)).cast("long").alias("docs_kept"),
-        )
-        .join(dropped, "source", "left")
-        .select(
-            "source",
-            "docs_kept",
-            F.coalesce("docs_decont", F.lit(0))
-            .cast("long")
-            .alias("docs_decontaminated"),
-            "total_tokens",
-        )
-    )
-    w_rank = Window.orderBy("total_tokens", "source")
-    ranked = survivors.select(
+    pool, eval_sh = eval_split(docs, 3)
+    keepers = gopher_keep(sentence_quality(pool, "doc_id", "source", "text"))
+    _, stats = decontaminate(keepers, eval_sh, 3)
+    return waterfill(stats).select(
         "source",
         "docs_kept",
         "docs_decontaminated",
         "total_tokens",
-        F.row_number().over(w_rank).alias("rk"),
-        F.sum("total_tokens")
-        .over(w_rank.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("pfx"),
-    )
-    glob = ranked.agg(
-        (F.sum("total_tokens") / 2).cast("long").alias("budget"),
-        F.count(F.lit(1)).alias("n"),
-        F.max("total_tokens").alias("tmax"),
-    )
-    r = ranked.crossJoin(F.broadcast(glob))
-    feas = r.where(
-        F.col("pfx")
-        + F.col("total_tokens") * (F.col("n") - F.col("rk"))
-        <= F.col("budget")
-    ).agg(
-        F.coalesce(F.max("rk"), F.lit(0)).alias("i"),
-        F.coalesce(F.max("pfx"), F.lit(0)).alias("pi"),
-    )
-    level = glob.crossJoin(F.broadcast(feas)).select(
-        F.when(
-            F.col("n") > F.col("i"),
-            F.floor(
-                (F.col("budget") - F.col("pi"))
-                / (F.col("n") - F.col("i"))
-            ),
-        )
-        .otherwise(F.col("tmax"))
-        .cast("long")
-        .alias("lvl"),
-        F.when(
-            F.col("n") > F.col("i"),
-            (F.col("budget") - F.col("pi"))
-            % (F.col("n") - F.col("i")),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rem"),
-        F.col("i"),
-    )
-    out = ranked.crossJoin(F.broadcast(level))
-    unsat_rk = out.where(F.col("rk") > F.col("i")).select(
-        "source",
-        F.row_number().over(Window.orderBy("source")).alias("u2"),
-    )
-    return (
-        out.join(unsat_rk, "source", "left")
-        .select(
-            "source",
-            "docs_kept",
-            "docs_decontaminated",
-            "total_tokens",
-            F.when(
-                F.col("rk") <= F.col("i"), F.col("total_tokens")
-            )
-            .otherwise(
-                F.col("lvl")
-                + F.when(F.col("u2") <= F.col("rem"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("allocated_tokens"),
-        )
+        "allocated_tokens",
     )
 
 
@@ -647,6 +461,11 @@ def pav_isotonic_calibration_binned(
     (score_calibration_bins r12, quality_threshold_sweep_confusion
     r13 TAIL — this adds the MONOTONE-fit operator those rows bin
     for)."""
+    from sparkksqldbbenchmark_spark.llm.curation import (
+        pav_bin_frame,
+        pav_fit,
+    )
+
     ev = load_table(spark, sf_dir, "events")
     binned = ev.select(
         F.least(
@@ -659,74 +478,8 @@ def pav_isotonic_calibration_binned(
         .otherwise(0)
         .alias("y"),
     )
-    grid = spark.range(_PAV_BINS).select(F.col("id").alias("bin"))
-    agg = (
-        grid.join(binned, "bin", "left")
-        .groupBy("bin")
-        .agg(
-            F.count("y").cast("long").alias("n"),
-            F.coalesce(F.sum("y"), F.lit(0)).cast("long").alias("k"),
-        )
-    )
-    wcum = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = agg.select(
-        "bin",
-        "n",
-        "k",
-        F.sum("n").over(wcum).alias("cn"),
-        F.sum("k").over(wcum).alias("ck"),
-    )
-    lo = cum.select(
-        F.col("bin").alias("j"),
-        F.col("ck").alias("ck_lo"),
-        F.col("cn").alias("cn_lo"),
-        F.col("k").alias("k_lo"),
-        F.col("n").alias("n_lo"),
-    )
-    hi = cum.select(
-        F.col("bin").alias("kk"),
-        F.col("ck").alias("ck_hi"),
-        F.col("cn").alias("cn_hi"),
-    )
-    pairs = (
-        lo.join(hi, F.col("j") <= F.col("kk"))
-        .select(
-            "j",
-            "kk",
-            (F.col("ck_hi") - F.col("ck_lo") + F.col("k_lo")).alias(
-                "num"
-            ),
-            (F.col("cn_hi") - F.col("cn_lo") + F.col("n_lo")).alias(
-                "den"
-            ),
-        )
-        .where(F.col("den") > 0)
-    )
-    key = (F.col("num") * F.lit(1099511627776)) / F.col("den")
-    ikey = F.floor(key).cast("long")
-    i_frame = agg.select(F.col("bin").alias("i"))
-    inner = (
-        i_frame.join(
-            pairs,
-            (F.col("j") <= F.col("i")) & (F.col("kk") >= F.col("i")),
-        )
-        .groupBy("i", "j")
-        .agg(
-            F.min_by(F.struct("num", "den"), ikey).alias("frac")
-        )
-    )
-    outer = inner.groupBy("i").agg(
-        F.max_by(
-            F.col("frac"),
-            F.floor(
-                (F.col("frac.num") * F.lit(1099511627776))
-                / F.col("frac.den")
-            ).cast("long"),
-        ).alias("best")
-    )
-    return agg.join(outer, agg.bin == outer.i).select(
+    agg = pav_bin_frame(spark, binned, _PAV_BINS)
+    return agg.join(pav_fit(agg), "bin").select(
         "bin",
         "n",
         "k",
@@ -5056,319 +4809,23 @@ def curation_pipeline_v4_composed(
     (curation_pipeline_v3_composed r15 staged;
     pav_isotonic_calibration_binned r15 staged — composed as the
     keep policy, the production use the PAV row exists for)."""
-    from sparkksqldbbenchmark_spark.llm.hashing import (
-        spark_md5_int,
-        spark_tokens,
-        spark_word_shingles,
+    from sparkksqldbbenchmark_spark.llm.curation import (
+        decontaminate,
+        eval_split,
+        pav_keep,
+        sentence_quality,
+        waterfill,
     )
 
-    nb = _V4_BINS
-    m, kbits = 4096, 3
     docs = load_table(spark, sf_dir, "documents")
-    evalsplit = F.expr(
-        f"{spark_md5_int('cast(doc_id as string)')} % 10"
-    )
-    pool = docs.where(evalsplit != 0)
-    eval_docs = docs.where(evalsplit == 0)
-    shexpr = F.expr(spark_word_shingles("text", 5))
-    eval_sh = eval_docs.select(F.explode(shexpr).alias("esh")).distinct()
-    # two consumers (Bloom build + exact-verify join) — materialize so
-    # the eval-split shingle explode+distinct runs once
-    eval_sh = eval_sh.localCheckpoint(eager=True)
-
-    # -- stage 1: dup-sentence quality stats (scan-side, O(n)) --
-    # r18 optimization (guide §4.1 prefer cheap native ops): ns/nd come
-    # from boundary positions + distinct token SLICES
-    # (llm/sentences.py) instead of the O(ns²) accumulate-struct fold —
-    # identical integers, linear per-row work.
-    from sparkksqldbbenchmark_spark.llm.sentences import (
-        with_sentence_counts,
-    )
-
-    toks = pool.select(
-        "doc_id",
-        "source",
-        "lang",
-        "text",
-        F.expr(spark_tokens("text")).alias("toks"),
-    ).where(F.size("toks") > 0)
-    quality = with_sentence_counts(toks).select(
-        "doc_id",
-        "source",
-        "lang",
-        "text",
-        F.size("toks").alias("n_words"),
-        "ns",
-        "nd",
-    )
-
-    # -- stage 2: PAV-calibrated keep over the bounded bin frame --
-    docbins = quality.select(
-        "doc_id",
-        "source",
-        "text",
-        "n_words",
-        (
-            F.lit(nb - 1)
-            - F.least(
-                F.lit(nb - 1),
-                F.expr("(ns - nd) * 1000000 div ns div 50000"),
-            )
-        ).alias("rb"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-    )
-    # materialize the doc grain ONCE (optimization guide §5 caching
-    # rule: reused AND expensive to recompute): the sentence fold above
-    # is an interpreted higher-order aggregate — the single most
-    # expensive per-row expression in the pipeline — and docbins feeds
-    # both the bin frame and the keep join; without a barrier every
-    # downstream consumer re-ran the fold (measured 17.8 s for the
-    # whole row). At cluster scale this is the persist() every staged
-    # curation pipeline puts between its stages.
-    docbins = docbins.localCheckpoint(eager=True)
-    grid = spark.range(nb).select(F.col("id").alias("rb"))
-    # the 20-row bin frame feeds five PAV subtrees (cum lo/hi, the
-    # i-frame, the base rate) — checkpoint it so the expensive
-    # sentence-fold lineage above it computes ONCE, not per subtree
-    aggb = (
-        grid.join(docbins.select("rb", "y"), "rb", "left")
-        .groupBy("rb")
-        .agg(
-            F.count("y").cast("long").alias("n"),
-            F.coalesce(F.sum("y"), F.lit(0)).cast("long").alias("k"),
-        )
-    ).localCheckpoint(eager=True)
-    wcum = Window.orderBy("rb").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = aggb.select(
-        "rb",
-        "n",
-        "k",
-        F.sum("n").over(wcum).alias("cn"),
-        F.sum("k").over(wcum).alias("ck"),
-    )
-    lo = cum.select(
-        F.col("rb").alias("j"),
-        F.col("ck").alias("ck_lo"),
-        F.col("cn").alias("cn_lo"),
-        F.col("k").alias("k_lo"),
-        F.col("n").alias("n_lo"),
-    )
-    hi = cum.select(
-        F.col("rb").alias("kk"),
-        F.col("ck").alias("ck_hi"),
-        F.col("cn").alias("cn_hi"),
-    )
-    fpairs = (
-        lo.join(hi, F.col("j") <= F.col("kk"))
-        .select(
-            "j",
-            "kk",
-            (F.col("ck_hi") - F.col("ck_lo") + F.col("k_lo")).alias(
-                "num"
-            ),
-            (F.col("cn_hi") - F.col("cn_lo") + F.col("n_lo")).alias(
-                "den"
-            ),
-        )
-        .where(F.col("den") > 0)
-    )
-    ikey = F.floor(
-        (F.col("num") * F.lit(1099511627776)) / F.col("den")
-    ).cast("long")
-    i_frame = aggb.select(F.col("rb").alias("i"))
-    inner = (
-        i_frame.join(
-            fpairs,
-            (F.col("j") <= F.col("i")) & (F.col("kk") >= F.col("i")),
-        )
-        .groupBy("i", "j")
-        .agg(F.min_by(F.struct("num", "den"), ikey).alias("frac"))
-    )
-    fitted = inner.groupBy("i").agg(
-        F.max_by(
-            F.col("frac"),
-            F.floor(
-                (F.col("frac.num") * F.lit(1099511627776))
-                / F.col("frac.den")
-            ).cast("long"),
-        ).alias("best")
-    ).select(F.col("i").alias("rb"), "best")
-    # base rate from the checkpointed bin frame, not the doc grain —
-    # identical sums, one less fold recomputation
-    base = aggb.agg(
-        F.sum("k").cast("long").alias("s_all"),
-        F.sum("n").cast("long").alias("n_all"),
-    )
-    keepbins = (
-        fitted.crossJoin(F.broadcast(base))
-        .where(
-            F.col("best.num") * F.col("n_all")
-            >= F.col("s_all") * F.col("best.den")
-        )
-        .select("rb")
-    )
-    keepers = docbins.join(F.broadcast(keepbins), "rb").select(
-        "doc_id", "source", "text", "n_words"
-    )
-
-    # -- stage 3: canonical exact dedup --
-    canon = keepers.withColumn(
-        "canonical_id",
-        F.min("doc_id").over(Window.partitionBy(F.md5("text"))),
-    )
-    deduped = canon.where(F.col("doc_id") == F.col("canonical_id"))
-    # three consumers below (shingle probes, the anti-join, the
-    # semi-join) — materialize so the md5 window and the keep join run
-    # once, not three times
-    deduped = deduped.localCheckpoint(eager=True)
-
-    # -- stage 4: Bloom-prefiltered decontamination --
-    j = F.explode(F.sequence(F.lit(0), F.lit(kbits - 1))).alias("j")
-    hp = (
-        "("
-        + spark_md5_int("concat(cast(j as string), '#', sh)")
-        + f") % {m}"
-    )
-    bloom = (
-        eval_sh.select(F.col("esh").alias("sh"), j)
-        .select(F.expr(hp).alias("p"))
-        .groupBy(F.expr("p DIV 32").alias("word"))
-        .agg(
-            F.expr("bit_or(shiftleft(1L, cast(p % 32 as int)))")
-            .cast("long")
-            .alias("bits")
-        )
-    )
-    train_sh = deduped.select(
-        "doc_id", F.explode(shexpr).alias("sh")
-    )
-    probes = train_sh.select("doc_id", "sh", j).select(
-        "doc_id", "sh", F.expr(hp).alias("p")
-    )
-    flagged_sh = (
-        probes.join(
-            F.broadcast(bloom), F.expr("word = p DIV 32"), "left"
-        )
-        .select(
-            "doc_id",
-            "sh",
-            F.when(
-                F.col("bits").isNotNull()
-                & (
-                    F.expr("bits & shiftleft(1L, cast(p % 32 as int))")
-                    != 0
-                ),
-                1,
-            )
-            .otherwise(0)
-            .alias("hit"),
-        )
-        .groupBy("doc_id", "sh")
-        .agg(F.sum("hit").alias("hits"))
-        .where(F.col("hits") == kbits)
-    )
-    contaminated = (
-        flagged_sh.join(
-            eval_sh.select(F.col("esh").alias("sh")), "sh"
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    # two consumers (anti + semi) — the contaminated id set is tiny;
-    # materialize so the shingle-probe subtree runs once
-    contaminated = contaminated.localCheckpoint(eager=True)
-    clean = deduped.join(contaminated, "doc_id", "left_anti")
-    dropped = (
-        deduped.join(contaminated, "doc_id", "left_semi")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).cast("long").alias("docs_decont"))
-    )
-
-    # -- stage 5: water-filled budget over the survivor frame --
-    survivors = (
-        clean.groupBy("source")
-        .agg(
-            F.sum("n_words").cast("long").alias("total_tokens"),
-            F.count(F.lit(1)).cast("long").alias("docs_kept"),
-        )
-        .join(dropped, "source", "left")
-        .select(
-            "source",
-            "docs_kept",
-            F.coalesce("docs_decont", F.lit(0))
-            .cast("long")
-            .alias("docs_decontaminated"),
-            "total_tokens",
-        )
-    )
-    w_rank = Window.orderBy("total_tokens", "source")
-    ranked = survivors.select(
+    pool, eval_sh = eval_split(docs, 5)
+    quality = sentence_quality(pool, "doc_id", "source", "lang", "text")
+    keepers = pav_keep(spark, quality, _V4_BINS)
+    _, stats = decontaminate(keepers, eval_sh, 5)
+    return waterfill(stats).select(
         "source",
         "docs_kept",
         "docs_decontaminated",
         "total_tokens",
-        F.row_number().over(w_rank).alias("rk"),
-        F.sum("total_tokens")
-        .over(w_rank.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("pfx"),
-    )
-    glob = ranked.agg(
-        (F.sum("total_tokens") / 2).cast("long").alias("budget"),
-        F.count(F.lit(1)).alias("n"),
-        F.max("total_tokens").alias("tmax"),
-    )
-    r = ranked.crossJoin(F.broadcast(glob))
-    feas = r.where(
-        F.col("pfx")
-        + F.col("total_tokens") * (F.col("n") - F.col("rk"))
-        <= F.col("budget")
-    ).agg(
-        F.coalesce(F.max("rk"), F.lit(0)).alias("i"),
-        F.coalesce(F.max("pfx"), F.lit(0)).alias("pi"),
-    )
-    level = glob.crossJoin(F.broadcast(feas)).select(
-        F.when(
-            F.col("n") > F.col("i"),
-            F.floor(
-                (F.col("budget") - F.col("pi"))
-                / (F.col("n") - F.col("i"))
-            ),
-        )
-        .otherwise(F.col("tmax"))
-        .cast("long")
-        .alias("lvl"),
-        F.when(
-            F.col("n") > F.col("i"),
-            (F.col("budget") - F.col("pi"))
-            % (F.col("n") - F.col("i")),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rem"),
-        F.col("i"),
-    )
-    out = ranked.crossJoin(F.broadcast(level))
-    unsat_rk = out.where(F.col("rk") > F.col("i")).select(
-        "source",
-        F.row_number().over(Window.orderBy("source")).alias("u2"),
-    )
-    return (
-        out.join(unsat_rk, "source", "left")
-        .select(
-            "source",
-            "docs_kept",
-            "docs_decontaminated",
-            "total_tokens",
-            F.when(
-                F.col("rk") <= F.col("i"), F.col("total_tokens")
-            )
-            .otherwise(
-                F.col("lvl")
-                + F.when(F.col("u2") <= F.col("rem"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("allocated_tokens"),
-        )
+        "allocated_tokens",
     )

@@ -863,6 +863,7 @@ def density_greedy_budget_certified(
     flagship is the priority-cut member; waterfill r14 the
     fairness member; this is the VALUE-DENSITY member with its
     approximation certificate)."""
+    from sparkksqldbbenchmark_spark.llm.curation import density_greedy_prefix
     from sparkksqldbbenchmark_spark.llm.hashing import spark_md5_int
 
     docs = load_table(spark, sf_dir, "documents")
@@ -876,29 +877,11 @@ def density_greedy_budget_certified(
         .cast("long")
         .alias("c"),
     )
-    key = F.expr("v * 1099511627776 div c")
-    w = Window.orderBy(key.desc(), "doc_id")
-    frame = w.rowsBetween(Window.unboundedPreceding, 0)
-    ordered = items.select(
-        "doc_id",
-        "v",
-        "c",
-        F.row_number().over(w).alias("rk"),
-        F.sum("c").over(frame).alias("cum_c"),
-        F.sum("v").over(frame).alias("cum_v"),
-    )
-    b = items.agg(
-        (F.sum("c") / 10).cast("long").alias("budget"),
-        F.max("v").alias("max_item_v"),
-    )
-    sel = (
-        ordered.crossJoin(F.broadcast(b))
-        .where(F.col("cum_c") <= F.col("budget"))
-        .agg(
-            F.coalesce(F.max("rk"), F.lit(0)).alias("n_sel"),
-            F.coalesce(F.max("cum_v"), F.lit(0)).alias("sel_v"),
-            F.coalesce(F.max("cum_c"), F.lit(0)).alias("sel_c"),
-        )
+    ordered, b, prefix = density_greedy_prefix(items, 10)
+    sel = prefix.agg(
+        F.coalesce(F.max("rk"), F.lit(0)).alias("n_sel"),
+        F.coalesce(F.max("cum_v"), F.lit(0)).alias("sel_v"),
+        F.coalesce(F.max("cum_c"), F.lit(0)).alias("sel_c"),
     )
     nxt = (
         ordered.crossJoin(F.broadcast(sel))
@@ -4161,282 +4144,34 @@ def curation_pipeline_v5_composed(
     density_greedy_budget_certified staged — the budget stage
     composed here, with its additive-optimality certificate graded
     standalone)."""
-    from sparkksqldbbenchmark_spark.llm.hashing import (
-        spark_md5_int,
-        spark_tokens,
-        spark_word_shingles,
+    from sparkksqldbbenchmark_spark.llm.curation import (
+        decontaminate,
+        density_greedy_prefix,
+        eval_split,
+        pav_keep,
+        sentence_quality,
     )
+    from sparkksqldbbenchmark_spark.llm.hashing import spark_md5_int
 
-    nb = _V5_BINS
-    m, kbits = 4096, 3
     docs = load_table(spark, sf_dir, "documents")
-    evalsplit = F.expr(
-        f"{spark_md5_int('cast(doc_id as string)')} % 10"
-    )
-    pool = docs.where(evalsplit != 0)
-    eval_docs = docs.where(evalsplit == 0)
-    shexpr = F.expr(spark_word_shingles("text", 5))
-    eval_sh = eval_docs.select(
-        F.explode(shexpr).alias("esh")
-    ).distinct()
-    # two consumers (Bloom build + exact-verify join) — materialize so
-    # the eval-split shingle explode+distinct runs once (the same four
-    # stage barriers as the measured v4 sibling, guide §5)
-    eval_sh = eval_sh.localCheckpoint(eager=True)
+    pool, eval_sh = eval_split(docs, 5)
+    quality = sentence_quality(pool, "doc_id", "source", "lang", "text")
+    keepers = pav_keep(spark, quality, _V5_BINS)
+    clean, stats = decontaminate(keepers, eval_sh, 5)
 
-    # -- stage 1: dup-sentence quality stats (scan-side, O(n)) --
-    # r18 optimization: O(n) boundary/slice sentence counts
-    # (llm/sentences.py) replace the O(ns²) fold — identical integers.
-    from sparkksqldbbenchmark_spark.llm.sentences import (
-        with_sentence_counts,
-    )
-
-    toks = pool.select(
-        "doc_id",
-        "source",
-        "lang",
-        "text",
-        F.expr(spark_tokens("text")).alias("toks"),
-    ).where(F.size("toks") > 0)
-    quality = with_sentence_counts(toks).select(
-        "doc_id",
-        "source",
-        "text",
-        F.size("toks").alias("n_words"),
-        "ns",
-        "nd",
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-    )
-
-    # -- stage 2: PAV-calibrated keep over the bounded bin frame --
-    docbins = quality.select(
-        "doc_id",
-        "source",
-        "text",
-        "n_words",
-        (
-            F.lit(nb - 1)
-            - F.least(
-                F.lit(nb - 1),
-                F.expr("(ns - nd) * 1000000 div ns div 50000"),
-            )
-        ).alias("rb"),
-        "y",
-    )
-    # materialize the doc grain ONCE (guide §5: reused AND expensive):
-    # the interpreted sentence fold above is the most expensive per-row
-    # expression in the pipeline, and docbins feeds both the bin frame
-    # and the keep join
-    docbins = docbins.localCheckpoint(eager=True)
-    grid = spark.range(nb).select(F.col("id").alias("rb"))
-    # checkpoint the 20-row bin frame: five PAV subtrees read it and
-    # the sentence-fold lineage above it must compute ONCE
-    aggb = (
-        grid.join(docbins.select("rb", "y"), "rb", "left")
-        .groupBy("rb")
-        .agg(
-            F.count("y").cast("long").alias("n"),
-            F.coalesce(F.sum("y"), F.lit(0))
-            .cast("long")
-            .alias("k"),
-        )
-    ).localCheckpoint(eager=True)
-    wcum = Window.orderBy("rb").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = aggb.select(
-        "rb",
-        "n",
-        "k",
-        F.sum("n").over(wcum).alias("cn"),
-        F.sum("k").over(wcum).alias("ck"),
-    )
-    lo = cum.select(
-        F.col("rb").alias("j"),
-        F.col("ck").alias("ck_lo"),
-        F.col("cn").alias("cn_lo"),
-        F.col("k").alias("k_lo"),
-        F.col("n").alias("n_lo"),
-    )
-    hi = cum.select(
-        F.col("rb").alias("kk"),
-        F.col("ck").alias("ck_hi"),
-        F.col("cn").alias("cn_hi"),
-    )
-    fpairs = (
-        lo.join(hi, F.col("j") <= F.col("kk"))
-        .select(
-            "j",
-            "kk",
-            (
-                F.col("ck_hi") - F.col("ck_lo") + F.col("k_lo")
-            ).alias("num"),
-            (
-                F.col("cn_hi") - F.col("cn_lo") + F.col("n_lo")
-            ).alias("den"),
-        )
-        .where(F.col("den") > 0)
-    )
-    ikey = F.floor(
-        (F.col("num") * F.lit(1099511627776)) / F.col("den")
-    ).cast("long")
-    i_frame = aggb.select(F.col("rb").alias("i"))
-    inner = (
-        i_frame.join(
-            fpairs,
-            (F.col("j") <= F.col("i"))
-            & (F.col("kk") >= F.col("i")),
-        )
-        .groupBy("i", "j")
-        .agg(F.min_by(F.struct("num", "den"), ikey).alias("frac"))
-    )
-    fitted = inner.groupBy("i").agg(
-        F.max_by(
-            F.col("frac"),
-            F.floor(
-                (F.col("frac.num") * F.lit(1099511627776))
-                / F.col("frac.den")
-            ).cast("long"),
-        ).alias("best")
-    ).select(F.col("i").alias("rb"), "best")
-    base = aggb.agg(
-        F.sum("k").cast("long").alias("s_all"),
-        F.sum("n").cast("long").alias("n_all"),
-    )
-    keepbins = (
-        fitted.crossJoin(F.broadcast(base))
-        .where(
-            F.col("best.num") * F.col("n_all")
-            >= F.col("s_all") * F.col("best.den")
-        )
-        .select("rb")
-    )
-    keepers = docbins.join(F.broadcast(keepbins), "rb").select(
-        "doc_id", "source", "text", "n_words"
-    )
-
-    # -- stage 3: canonical exact dedup --
-    canon = keepers.withColumn(
-        "canonical_id",
-        F.min("doc_id").over(Window.partitionBy(F.md5("text"))),
-    )
-    deduped = canon.where(F.col("doc_id") == F.col("canonical_id"))
-    # three consumers below (shingle probes, the anti-join, the
-    # semi-join) — materialize so the md5 window and the keep join run
-    # once, not three times
-    deduped = deduped.localCheckpoint(eager=True)
-
-    # -- stage 4: Bloom-prefiltered decontamination --
-    j = F.explode(F.sequence(F.lit(0), F.lit(kbits - 1))).alias("j")
-    hp = (
-        "("
-        + spark_md5_int("concat(cast(j as string), '#', sh)")
-        + f") % {m}"
-    )
-    bloom = (
-        eval_sh.select(F.col("esh").alias("sh"), j)
-        .select(F.expr(hp).alias("p"))
-        .groupBy(F.expr("p DIV 32").alias("word"))
-        .agg(
-            F.expr("bit_or(shiftleft(1L, cast(p % 32 as int)))")
-            .cast("long")
-            .alias("bits")
-        )
-    )
-    train_sh = deduped.select(
-        "doc_id", F.explode(shexpr).alias("sh")
-    )
-    probes = train_sh.select("doc_id", "sh", j).select(
-        "doc_id", "sh", F.expr(hp).alias("p")
-    )
-    flagged_sh = (
-        probes.join(
-            F.broadcast(bloom), F.expr("word = p DIV 32"), "left"
-        )
-        .select(
-            "doc_id",
-            "sh",
-            F.when(
-                F.col("bits").isNotNull()
-                & (
-                    F.expr(
-                        "bits & shiftleft(1L, cast(p % 32 as int))"
-                    )
-                    != 0
-                ),
-                1,
-            )
-            .otherwise(0)
-            .alias("hit"),
-        )
-        .groupBy("doc_id", "sh")
-        .agg(F.sum("hit").alias("hits"))
-        .where(F.col("hits") == kbits)
-    )
-    contaminated = (
-        flagged_sh.join(
-            eval_sh.select(F.col("esh").alias("sh")), "sh"
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    # two consumers (anti + semi) — the contaminated id set is tiny;
-    # materialize so the shingle-probe subtree runs once
-    contaminated = contaminated.localCheckpoint(eager=True)
-    clean = deduped.join(contaminated, "doc_id", "left_anti")
-    dropped = (
-        deduped.join(contaminated, "doc_id", "left_semi")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).cast("long").alias("docs_decont"))
-    )
-
-    # -- stage 5: density-greedy knapsack at DOC grain --
-    stats = (
-        clean.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("docs_kept"),
-            F.sum("n_words").cast("long").alias("total_tokens"),
-        )
-        .join(dropped, "source", "left")
-        .select(
-            "source",
-            "docs_kept",
-            F.coalesce("docs_decont", F.lit(0))
-            .cast("long")
-            .alias("docs_decontaminated"),
-            "total_tokens",
-        )
-    )
+    # -- density-greedy knapsack at DOC grain, half the clean tokens --
     v = f"({spark_md5_int('text')}) % 1000 + 1"
     items = clean.select(
         "doc_id",
         "source",
         F.expr(v).cast("long").alias("v"),
-        F.col("n_words").cast("long").alias("cst"),
+        F.col("n_words").cast("long").alias("c"),
     )
-    bb = items.agg(
-        (F.sum("cst") / 2).cast("long").alias("budget")
-    )
-    key = F.expr("v * 1099511627776 div cst")
-    wd = Window.orderBy(key.desc(), "doc_id")
-    ordered = items.select(
-        "doc_id",
-        "source",
-        "v",
-        "cst",
-        F.sum("cst")
-        .over(wd.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("cum_c"),
-    )
-    selagg = (
-        ordered.crossJoin(F.broadcast(bb))
-        .where(F.col("cum_c") <= F.col("budget"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("docs_selected"),
-            F.sum("cst").cast("long").alias("selected_tokens"),
-            F.sum("v").cast("long").alias("selected_value"),
-        )
+    _, _, prefix = density_greedy_prefix(items, 2)
+    selagg = prefix.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("docs_selected"),
+        F.sum("c").cast("long").alias("selected_tokens"),
+        F.sum("v").cast("long").alias("selected_value"),
     )
     return stats.join(selagg, "source", "left").select(
         "source",

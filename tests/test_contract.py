@@ -38,13 +38,14 @@ def test_registry_order_fits_driver_window():
     assert all(n not in entrymod.TAIL for n in head[: len(names) - len(entrymod.TAIL)])
 
 
-# The exact expected graded-head prefix for THIS round. The plan modules
-# carrying prior cohorts import behind try/except in __spark_entry__
-# (ADVICE r14): if one silently failed to import, the registry would
-# still satisfy len>=50 and the window test via TAIL rows, and the
-# driver would quietly grade already-pinned TAIL rows instead of the
-# intended head. Pinning the head names makes that failure loud.
-# Regenerate on each deliberate rotation.
+# The exact expected graded-head prefix for THIS round. Every plan
+# module imports unconditionally in __spark_entry__, so a broken module
+# fails the import itself; this pin still guards the ordering side: a
+# plan module dropped from the import list, or a registration moved,
+# would let the registry satisfy len>=50 and the window test via TAIL
+# rows while the grading window quietly fills with already-pinned TAIL
+# rows instead of the intended head. Regenerate on each deliberate
+# rotation.
 EXPECTED_HEAD = (
     "streaming_cdc_latest",
     "python_datasource_stream_agg",
@@ -139,8 +140,8 @@ TAIL_SOURCE_SHA256 = {
     "temporal_split_straddle_audit": "6f6c5224aecd05ff",
     "psi_drift_bins_exact": "42b6cc5f1f84a502",
     "graph_pregel_superstep2": "3fa1853c75993da7",
-    "curation_pipeline_v3_composed": "c7f72d273a523997",
-    "pav_isotonic_calibration_binned": "d479055002c7f14c",
+    "curation_pipeline_v3_composed": "e80bf7db6fef510d",
+    "pav_isotonic_calibration_binned": "6ff7f9a50cd43b46",
     "kendall_tau_topk_exact": "e517fc62c4feba83",
     "shapley_attribution_exact": "216bb90d1da23778",
     "bigram_draft_acceptance_rate": "ab2244ecb6b09066",
@@ -153,7 +154,7 @@ TAIL_SOURCE_SHA256 = {
     "join_cardinality_skew_twin": "df524fe7fb0adc94",
     "reciprocal_rank_fusion_exact": "b3069121017afe68",
     "cdc_chunk_dedup_mass": "9db3dd77dc50310d",
-    "shapley_sampled_permutations_certified": "e2aba38576ab7f3e",
+    "shapley_sampled_permutations_certified": "87eafff3701f44e4",
     "fagin_ta_topk_certified": "6ecc9bb1a1ca913e",
     "err_exact_dyadic": "81ed2f5127cf5dbb",
     "kmv_intersection_estimate_certified": "85dde66b5627bc7d",
@@ -193,17 +194,17 @@ TAIL_SOURCE_SHA256 = {
     "kmv_sketch_union_merge_certified": "ab16e4ab8875c04b",
     "skyline_pareto_frontier": "1d6dc75a70f81339",
     "streaming_full_outer_join_both_nulls": "863f2c62803f1cf0",
-    "gopher_repetition_rules": "a859ec95071ed802",
+    "gopher_repetition_rules": "f68b2cd6539ad12a",
     "cohens_kappa_exact": "c9efd76ba57cc6b4",
-    "waterfill_budget_allocation": "ee77677cbc9f3df8",
+    "waterfill_budget_allocation": "31a61261c7ff45e0",
     "graph_2hop_degree_sum": "c3af6d6ef779a87c",
     "data_retention_expiry_plan": "725f90cb9a493429",
-    "decontam_bloom_prefilter_certified": "3349f499b50c885c",
+    "decontam_bloom_prefilter_certified": "3e994ed7c27fbc55",
     "bbit_minwise_estimate_on_candidates": "94b891705cc26aff",
     "audio_decimate_boxcar": "55914bbd740d8010",
-    "jl_projection_distance_certified": "5e2f6856bdf836b8",
+    "jl_projection_distance_certified": "5ada167458dc386b",
     "sft_loss_mask_plan": "aecc4f896998bf74",
-    "curation_pipeline_v2_composed": "f9e432f40b8091c3",
+    "curation_pipeline_v2_composed": "24a801fc3ce8baf6",
     "rendezvous_shard_assignment_certified": "0217b5c12be4dfcf",
     "average_precision_exact": "5bccabacbed09ec3",
     "macro_f1_exact": "23e770c834aa2d6b",
@@ -228,7 +229,7 @@ TAIL_SOURCE_SHA256 = {
     "cohort_ltv_accumulation": "88a005233ecb4f67",
     "reservoir_bottomk_certified": "540fba811337fe0f",
     "class_balanced_undersample": "21a8d8cc63e4c324",
-    "auc_rank_sum_exact": "4b3898891e0b990d",
+    "auc_rank_sum_exact": "c081eafbf035f92b",
     "pairwise_energy_sufficient_stats": "893b7c2a85dffc2e",
     "knn_loo_label_accuracy": "7a6d1a5c736b7a73",
     "lsh_band_sensitivity_audit": "5bb5d110a5ff0e46",
@@ -245,15 +246,15 @@ TAIL_SOURCE_SHA256 = {
     "setsim_prefix_filter_join": "6823e180f3263049",
     "bucketed_colocated_join_audit": "8cb0e5b3f1a47b64",
     "sentence_chunk_greedy_fold": "c4b7821ecbc71580",
-    "bloom_prefilter_fpr_certified": "d1a52123a6cc43e7",
+    "bloom_prefilter_fpr_certified": "5960366ded9e30df",
     "agg_breadth_suite": "2d407d6fe0f94fac",
     "score_calibration_bins": "2b3500da4ffea2a9",
     "dataframe_transpose_suite": "ac6773dfb24f75aa",
     "melt_api_reshape": "2eb4c631a9f505aa",
     "string_format_suite": "3315d528f456063e",
-    "order_by_all_offset_sql": "34e16628d75c4237",
-    "execute_immediate_sql": "8572e93677dfdf35",
-    "nth_value_window_suite": "ec9fcc56a91c92d3",
+    "order_by_all_offset_sql": "bd55492f041c1a2c",
+    "execute_immediate_sql": "9b17e8dbb677d299",
+    "nth_value_window_suite": "85e676bac99ffd5a",
     "interarrival_dyadic_histogram": "696a92d8c4d70e4b",
     "ohlc_hourly_bars": "4cd175bcdbed2f04",
     "id_sequence_gap_audit": "f37e2d544b7b54d5",
@@ -290,21 +291,21 @@ TAIL_SOURCE_SHA256 = {
     "split_leakage_near_dup_audit": "3961da710c049902",
     "hof_suite2": "e12d27e30a9c333b",
     "struct_field_mutation_suite": "fed2adf63c390e80",
-    "named_window_clause_sql": "ddf7d96ea2d63853",
+    "named_window_clause_sql": "2cf142d52e5e89a2",
     "like_quantifier_suite": "cd29421a06b11e97",
     "text_format_roundtrip": "d9c5cbc683f6cff3",
     "map_hof_suite2": "1837a7557aa581f1",
     "union_missing_columns_suite": "4ffe5546967d96c4",
-    "lateral_column_alias_sql": "99dba9913302554d",
-    "null_aware_antijoin_notin": "4b3bc4bf443de0d0",
-    "using_join_full_coalesce": "afce1d11b533fb39",
-    "correlated_nonequi_exists": "a9f6236207852537",
+    "lateral_column_alias_sql": "b76ceb4b18d7b149",
+    "null_aware_antijoin_notin": "a593cf6c06f6c856",
+    "using_join_full_coalesce": "26e1ab6296a009cb",
+    "correlated_nonequi_exists": "f699c84798743392",
     "regr_agg_suite": "75e6a75a558bbcbd",
     "bpe_pair_merge_candidates": "9fdd92620f27e794",
     "ngram_novelty_growth": "a8c89cb182e8b3fb",
     "streaming_file_sink_partitioned": "8df2bbb845622abd",
     "hidden_file_metadata_scan": "cca0495a50b8f620",
-    "udtf_table_arg_partition_by": "c736274d6b6af7f8",
+    "udtf_table_arg_partition_by": "851084d542cddc70",
     "session_window_dynamic_gap": "cf6913403a3b2468",
     "pca_power_iteration_1d": "3a3ddf0d1f0f58f8",
     "running_distinct_users": "da916cdae660ef9f",
@@ -320,7 +321,7 @@ TAIL_SOURCE_SHA256 = {
     "span_corruption_mask_plan": "792e368cf262a5cd",
     "length_bucketed_batching": "78d287e81cca2b5b",
     "kmeans_lloyd_step_quantized": "dd1d6ae684227195",
-    "bitmap_distinct_functions": "e82906bd0dcc6d86",
+    "bitmap_distinct_functions": "7f774f67c65d8848",
     "window_group_limit_pushdown": "f40f7aa023f3cf4d",
     "rolling_correlation_24h": "e4892fdfb25738c2",
     "clustered_write_sorted_runs": "eb878b3f195d4100",
@@ -337,8 +338,8 @@ TAIL_SOURCE_SHA256 = {
     "merkle_range_digest": "85b072788be4399c",
     "acf_lag_autocorr": "555f7393da610ffd",
     "pareto_frontier_skyline": "151c1a53ae3e25b3",
-    "geo_nearest_site_join": "8e8f8d1a80499309",
-    "geohash_bucket_stats": "cd610bc64ddcaba5",
+    "geo_nearest_site_join": "4aed8f431c60926f",
+    "geohash_bucket_stats": "cdd5d92a81572c15",
     "python_datasource_filter_pushdown": "c3d61c324c5b21c6",
     "benford_leading_digit": "05ee82eb2d29e1f7",
     "peak_concurrency_sweep": "4340c847a0aa2f9e",
@@ -382,10 +383,10 @@ TAIL_SOURCE_SHA256 = {
     "pivot_dynamic_two_pass": "88775852ba553498",
     "csv_line_codec_suite": "e7d5cf868d354183",
     "checksum_encoding_suite": "11a3a3407957e831",
-    "sql_scripting_variables": "e8b6a8c4cdefd3f1",
-    "identifier_parameterized_query": "cd8a34308d064ad8",
-    "pipe_syntax_suite": "250b5b2c3c401814",
-    "sql_table_function_lateral": "27f9b2b7ddb6f54f",
+    "sql_scripting_variables": "bc90bac557620a49",
+    "identifier_parameterized_query": "a09137e73278269c",
+    "pipe_syntax_suite": "49ae5c85af617d33",
+    "sql_table_function_lateral": "c1fd350816adc60f",
     "json_roundtrip_suite": "86a75de74e49ab71",
     "partition_overwrite_backfill": "6bb4bb7da8fcb53b",
     "schema_evolution_mergeschema": "02c217b579075502",
@@ -395,22 +396,22 @@ TAIL_SOURCE_SHA256 = {
     "temperature_mixture_quota": "73075c1cf62dc081",
     "pandas_api_on_spark_agg": "29c56b4b1b441971",
     "stat_crosstab_matrix": "9c9c8c8b8f143636",
-    "luhn_pii_check": "8ac6fc30bc4e3164",
+    "luhn_pii_check": "b46d4943c93bbbd2",
     "array_mutation_suite": "5950b6999b3f1a49",
     "try_function_suite2": "28750d09845f83aa",
     "char_octet_length_suite": "26ae7007543b04a4",
-    "bucketed_orders_lineitem_join": "99438d6e1bd2e71c",
-    "tpch_q2_min_cost_supplier": "85a931527c23405d",
-    "tpch_q20_potential_promotion": "b92b2fad59345353",
-    "dynamic_partition_pruning_join": "6b44538e3a70cc4a",
+    "bucketed_orders_lineitem_join": "5dbc6afc7873ca8a",
+    "tpch_q2_min_cost_supplier": "af843f2f51ecc79f",
+    "tpch_q20_potential_promotion": "03ee387993240954",
+    "dynamic_partition_pruning_join": "5d316f4a0195cb57",
     "scd2_dimension_build": "de30e6cc9c13d79e",
     "table_diff_reconciliation": "2c354a56d4a542f0",
     "merge_on_read_upsert": "80c2bbf7b2049697",
-    "lateral_topn_per_key": "45dff38b8846217a",
-    "sql_macro_suite": "ea4bde3947b1e0cb",
+    "lateral_topn_per_key": "d900697d82b42059",
+    "sql_macro_suite": "9cfdceb4e01f1203",
     "variant_extract_suite": "0a6f2f6dbe59285b",
     "collation_group_suite": "51b6dc9e43385c4e",
-    "groupby_all_unpivot_sql": "d50a3664338dba96",
+    "groupby_all_unpivot_sql": "5e0d682cff98c87c",
     "explode_outer_semantics": "14a1f64c262bec01",
     "interval_datetime_suite": "0bd984386baaa3d9",
     "sequence_densify_per_key": "55587a05e596ebcf",
@@ -454,8 +455,8 @@ TAIL_SOURCE_SHA256 = {
     "dedup_cross_source_matrix": "c39e91736f004d47",
     "dedup_keep_best": "877065ddab90b1c9",
     "domain_mixture_resample": "599681a9f19dc80a",
-    "partitioned_write_prune": "1423017b20c63fa0",
-    "range_layout_scan": "f00c7a3babc6277d",
+    "partitioned_write_prune": "4c383ac4753d325e",
+    "range_layout_scan": "f9e84c715d6e14f8",
     "zorder_layout_scan": "6f980ce0831a4345",
     "bloom_semijoin_pushdown": "4b15a831b77b9951",
     "ann_recall_certified": "a46c24dc0d2afee0",
@@ -473,8 +474,8 @@ TAIL_SOURCE_SHA256 = {
     "multimodal_resize": "669c1f8e027a62b3",
     "multimodal_feature_extract": "2de2937d97b3b4d8",
     "tpch_q9_product_profit": "5f678cc3b755e07f",
-    "tpch_q16_supplier_part_counts": "8c20945ecf349181",
-    "tpch_q11_important_stock": "f7918ae47048c74d",
+    "tpch_q16_supplier_part_counts": "d6cd8118c3618a6a",
+    "tpch_q11_important_stock": "0dd1733d7dd2d4bd",
     "dedup_embedding_cosine": "0b1b9c4bdd070ec4",
     "similarity_ivf_topk": "80152dadf9db64e5",
     "decontam_ngram_overlap": "01f1694c5aee338f",
@@ -497,7 +498,7 @@ TAIL_SOURCE_SHA256 = {
     "null_semantics_suite": "823041f910e7ac52",
     "grouping_sets_report": "fe04e9691ec10b4d",
     "linear_interpolation_gapfill": "050d076993da4ecd",
-    "pii_scrub_stats": "0de4676ab6e22b39",
+    "pii_scrub_stats": "f41d48734b2d1cd8",
     "sequence_packing_manifest": "f1f5e1b418da0dcd",
     "passage_dup_stats": "bf1b4b80d0e66322",
     "fuzzy_dedup_levenshtein": "5183024505069499",
@@ -558,7 +559,6 @@ TAIL_SOURCE_SHA256 = {
     "range_join_shipment_windows": "758fb58d4bbd52a8",
     "text_quality_scores": "c9148936e55f74b7",
 }
-INFRA_SOURCE_SHA256 = "2cba18208f7f59e9"
 # Shared-infrastructure pin (ADVICE r04, tools/tail_hash.py:68 carve-out
 # gap): loader/session semantics every TAIL query flows through. A change
 # here voids ALL TAIL evidence at once — run the full oracle sweep
@@ -608,6 +608,39 @@ def test_tail_source_unchanged_since_green_verdict():
         f"re-grading"
     )
 
+
+
+def test_tail_fingerprint_covers_plan_module_helpers(tmp_path):
+    """A TAIL row's pin must move when a helper it calls changes, also
+    when that helper lives in a plan module (where whole-module hashing
+    is skipped). Two throwaway plan modules differ only in the helper's
+    body; their row fingerprints must differ."""
+    import importlib.util
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    from tail_hash import tail_impl_fingerprint
+
+    def row_of(tag: str, helper_body: str):
+        path = tmp_path / f"probe_{tag}.py"
+        path.write_text(
+            "def _helper(x):\n"
+            f"    return {helper_body}\n\n\n"
+            "def row(spark, sf_dir):\n"
+            "    return _helper(sf_dir)\n"
+        )
+        name = f"sparkksqldbbenchmark_spark.plans._fp_probe_{tag}"
+        spec = importlib.util.spec_from_file_location(name, path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod.row
+
+    assert tail_impl_fingerprint(row_of("a", "x")) != tail_impl_fingerprint(
+        row_of("b", "x + x")
+    )
 
 def test_container_type_gate_rejects_planted_array_column(spark):
     """The r04/r08 failure class: a raw array/map/struct output column

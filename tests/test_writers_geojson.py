@@ -1,4 +1,4 @@
-"""Partitioned/bucketed writers and GeoJSON nested-structure access."""
+"""Partitioned/bucketed table layout and GeoJSON nested-structure access."""
 
 from __future__ import annotations
 
@@ -8,7 +8,8 @@ import tempfile
 from pyspark.sql import functions as F
 
 from sparkksqldbbenchmark_spark.catalog import load_table
-from sparkksqldbbenchmark_spark.sources import files, writers
+from sparkksqldbbenchmark_spark.operators.bucketing import write_bucketed
+from sparkksqldbbenchmark_spark.sources import files
 
 SF = "/root/testdata/sf0.001"
 
@@ -16,9 +17,9 @@ SF = "/root/testdata/sf0.001"
 def test_partitioned_write_prunes(spark):
     events = load_table(spark, SF, "events")
     d = tempfile.mkdtemp(prefix="part_")
-    writers.write_partitioned(
-        events.withColumn("day", F.to_date("ts")), d, ["event_type"]
-    )
+    events.withColumn("day", F.to_date("ts")).write.mode(
+        "overwrite"
+    ).partitionBy("event_type").parquet(d)
     # partition directories exist
     parts = [p for p in os.listdir(d) if p.startswith("event_type=")]
     assert len(parts) == 5
@@ -41,15 +42,18 @@ def test_bucketed_table_join_no_shuffle(spark):
     li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
     # warehouse dir is a static conf; tables land in ./spark-warehouse
     # (gitignored) and are dropped below
-    writers.write_bucketed_table(orders, "t_orders_b", ["o_orderkey"], buckets=4)
-    writers.write_bucketed_table(
+    write_bucketed(
+        orders, "t_orders_b", "o_orderkey", buckets=4, sorted_by_key=False
+    )
+    write_bucketed(
         li.withColumnRenamed("l_orderkey", "o_orderkey"),
         "t_lineitem_b",
-        ["o_orderkey"],
+        "o_orderkey",
         buckets=4,
+        sorted_by_key=False,
     )
-    a = writers.read_table(spark, "t_orders_b")
-    b = writers.read_table(spark, "t_lineitem_b")
+    a = spark.table("t_orders_b")
+    b = spark.table("t_lineitem_b")
     joined = a.join(b, "o_orderkey")
     import contextlib, io
 

@@ -12,7 +12,9 @@ Fingerprint = sha256 over the query's wrapper-function source plus the
 FULL source of every sparkksqldbbenchmark_spark module it references,
 directly or transitively — through module attributes in its globals,
 functions it calls, and `from package.x import y` statements inside
-the function body (regex over the gathered sources). Foundational
+the function body (regex over the gathered sources). Helpers defined in
+a plan module are hashed by their own function source (and their
+callees'), never by the whole plan module. Foundational
 shared modules every query flows through (catalog, session, registry)
 are excluded: a loader fix must not invalidate every TAIL verdict —
 those modules are exercised by every graded head row each round.
@@ -79,12 +81,12 @@ def tail_impl_fingerprint(fn) -> str:
                 continue
             if inspect.ismodule(v) and v.__name__.startswith(_PKG):
                 modnames.add(v.__name__)
-            elif (
-                inspect.isfunction(v)
-                and v.__module__.startswith(_PKG)
-                and not v.__module__.startswith(f"{_PKG}.plans")
-            ):
-                modnames.add(v.__module__)
+            elif inspect.isfunction(v) and v.__module__.startswith(_PKG):
+                # a helper defined in a plan module contributes its own
+                # (and its callees') source, not the whole plan module:
+                # editing a sibling row must not re-pin this one
+                if not v.__module__.startswith(f"{_PKG}.plans"):
+                    modnames.add(v.__module__)
                 visit(v)
 
     visit(fn)
